@@ -25,7 +25,7 @@ checkpoint cuts the lineage that would otherwise grow exponentially).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 DEFAULT_PERMS = 16
@@ -335,16 +335,25 @@ def connected_components(
         # keeps its natural parallelism.
         e2 = e2.coalesce(max(1, -(-cur_n // _CC_ROWS_PER_PARTITION)))
         # materialize the round: reliable parquet checkpoint when a dir
-        # is given (resumable across drivers), localCheckpoint otherwise
+        # is given (resumable across drivers), localCheckpoint otherwise.
+        # Convergence test: stable edge-set fingerprint (order-
+        # insensitive) — observed on the round's own write when there is
+        # one, so the checkpointed path runs no second action per round
+        fp = (
+            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
+            F.count(F.lit(1)).alias("n"),
+        )
         if checkpoint_dir:
-            e2.write.mode("overwrite").parquet(_round_dir(rounds))
-            e2 = spark.read.parquet(_round_dir(rounds))
+            seen = Observation()
+            e2.observe(seen, *fp).write.mode("overwrite").parquet(
+                _round_dir(rounds)
+            )
+            # explicit schema: inference would run a footer-reading job
+            e2 = spark.read.schema(e2.schema).parquet(_round_dir(rounds))
+            h = seen.get
         else:
             e2 = e2.localCheckpoint(eager=True)
-        # convergence: stable edge-set fingerprint (order-insensitive)
-        h = e2.select(
-            F.expr("bit_xor(xxhash64(u, v))").alias("h"), F.count("*").alias("n")
-        ).collect()[0]
+            h = e2.select(*fp).collect()[0]
         cur_hash = (h["h"], h["n"])
         if checkpoint_dir:
             ckpt.fs_write_json(

@@ -191,25 +191,6 @@ def simhash(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
     )
 
 
-def simhash_duplicates(
-    df: DataFrame, id_col: str, text_col: str = "text",
-    with_members: bool = False,
-) -> DataFrame:
-    """Docs sharing an identical 64-bit simhash fingerprint (bucket
-    groupBy). ``with_members`` is test-scale only (giant-array hazard —
-    see exact_duplicates); the scale path pairs via
-    ``simhash_band_pairs``."""
-    aggs = [F.count("*").alias("n_docs")]
-    if with_members:
-        aggs.append(F.array_sort(F.collect_list("id")).alias("member_ids"))
-    return (
-        simhash(df, id_col, text_col)
-        .groupBy("simhash")
-        .agg(*aggs)
-        .where(F.col("n_docs") > 1)
-    )
-
-
 def simhash_band_pairs(
     df: DataFrame, id_col: str, text_col: str = "text", max_hamming: int = 3
 ) -> DataFrame:

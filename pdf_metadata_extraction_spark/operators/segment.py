@@ -24,22 +24,13 @@ Semantics (locked by our golden tests):
    box — J2.
 
 Spark shape: the kernel is document-local, so it runs inside the same
-Arrow batch as extraction when fused (plans/pipeline.py) — **zero
-shuffle**; standalone it is ``applyInPandas`` grouped by url, i.e. one
-shuffle on the url-bucket partitioning the scan already has (co-located
-at the Iceberg layout, so AQE turns it into a local sort at scale).
+Arrow batch as extraction (plans/pipeline.py) — **zero shuffle**.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame
-
 from pdf_metadata_extraction_spark.operators.boxes import boxes_intersect
 from pdf_metadata_extraction_spark.operators.extract import tokens_to_text
-from pdf_metadata_extraction_spark.schemas import SEGMENTS
 
 V_GAP_MIN = 6.0
 V_GAP_FACTOR = 1.5
@@ -352,86 +343,3 @@ def segment_doc(
         )
         sid += 1
     return segments
-
-
-# ---------------------------------------------------------------- Spark stage
-def segment_tokens(
-    tokens: DataFrame,
-    seg_boxes: DataFrame | None = None,
-    label_boxes: DataFrame | None = None,
-) -> DataFrame:
-    """tokens ⟶ segments, grouped per url (applyInPandas).
-
-    ``seg_boxes`` / ``label_boxes`` use schemas.SEGMENT_BOXES_TABLE shape
-    (url + box fields). They are tiny relative to tokens → joined in as
-    grouped co-inputs via cogroup when present.
-    """
-    if seg_boxes is None and label_boxes is None:
-        def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            segs = segment_doc(pdf.to_dict("records"))
-            return _segs_to_pdf(key[0], segs)
-
-        return tokens.groupBy("url").applyInPandas(run, schema=SEGMENTS)
-
-    spark = tokens.sparkSession
-    empty = pd.DataFrame(
-        columns=["url", "page_number", "left", "top", "width", "height",
-                 "page_width", "page_height", "segment_type", "kind"]
-    )
-    boxes_all = []
-    if seg_boxes is not None:
-        boxes_all.append(seg_boxes.withColumn("kind", _lit_seg(spark)))
-    if label_boxes is not None:
-        boxes_all.append(label_boxes.withColumn("kind", _lit_label(spark)))
-    boxes_df = boxes_all[0]
-    for b in boxes_all[1:]:
-        boxes_df = boxes_df.unionByName(b)
-
-    def run_cg(key: tuple, toks: pd.DataFrame, boxes: pd.DataFrame) -> pd.DataFrame:
-        sb = boxes[boxes["kind"] == "seg"].to_dict("records")
-        lb = boxes[boxes["kind"] == "label"].to_dict("records")
-        dims = (0.0, 0.0)
-        if sb and sb[0].get("page_width"):
-            dims = (sb[0]["page_width"] or 0.0, sb[0]["page_height"] or 0.0)
-        segs = segment_doc(toks.to_dict("records"), sb, lb, dims)
-        return _segs_to_pdf(key[0], segs)
-
-    return (
-        tokens.groupBy("url")
-        .cogroup(boxes_df.groupBy("url"))
-        .applyInPandas(run_cg, schema=SEGMENTS)
-    )
-
-
-def _lit_seg(spark):
-    from pyspark.sql import functions as F
-
-    return F.lit("seg")
-
-
-def _lit_label(spark):
-    from pyspark.sql import functions as F
-
-    return F.lit("label")
-
-
-def _segs_to_pdf(url: str, segs: list[dict]) -> pd.DataFrame:
-    rows = [
-        {
-            "url": url,
-            "segment_id": s["segment_id"],
-            "page": s["page"],
-            "text": s["text"],
-            "segment_type": s["segment_type"],
-            "boxes": s["boxes"],
-            "is_label": s["is_label"],
-            "font_size": s["font_size"],
-            "bold_ratio": s["bold_ratio"],
-        }
-        for s in segs
-    ]
-    return pd.DataFrame(
-        rows,
-        columns=["url", "segment_id", "page", "text", "segment_type", "boxes",
-                 "is_label", "font_size", "bold_ratio"],
-    )

@@ -1,4 +1,4 @@
-"""Explicit skew handling — salted repartition for mega-domains
+"""Explicit skew handling — salting for mega-domains
 (north rule; the reference has no analogue — SURVEY.md §4 'absent').
 
 Common-Crawl-style corpora put ~half the rows in a handful of domains
@@ -6,10 +6,10 @@ Common-Crawl-style corpora put ~half the rows in a handful of domains
 Any per-domain shuffle (groupBy domain, domain-bucketed joins) then
 hot-spots one partition. Two tools:
 
-- ``with_salt``: add ``salt = pmod(hash(url), n_salt)`` and repartition
-  on (key, salt) — splits a hot key across n_salt partitions. Aggregates
-  then run in two phases (partial per (key, salt), final per key) —
-  ``salted_groupby_count`` shows the pattern.
+- ``with_salt``: add ``salt = pmod(crc32(url), n_salt)`` — keying a
+  shuffle on (key, salt) splits a hot key across n_salt partitions.
+  Aggregates then run in two phases (partial per (key, salt), final per
+  key) — ``salted_groupby_count`` shows the pattern.
 - AQE skew-join splitting is enabled session-wide (session.py) for the
   join side of the same problem.
 
@@ -37,14 +37,6 @@ def with_salt(df: DataFrame, key: str | Column, n_salt: int = DEFAULT_SALT,
     return df.withColumn(
         salt_col, F.pmod(F.crc32(F.col(salt_src).cast("string")), F.lit(n_salt)).cast("int")
     )
-
-
-def salted_repartition(df: DataFrame, key: str, n_salt: int = DEFAULT_SALT,
-                       num_partitions: int | None = None) -> DataFrame:
-    salted = with_salt(df, key, n_salt)
-    if num_partitions:
-        return salted.repartition(num_partitions, F.col(key), F.col("salt"))
-    return salted.repartition(F.col(key), F.col("salt"))
 
 
 def salted_groupby_count(df: DataFrame, key: str, n_salt: int = DEFAULT_SALT,

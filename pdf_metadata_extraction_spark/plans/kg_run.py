@@ -240,7 +240,7 @@ def run_kg_pipeline(
         )
 
         tr = time.monotonic()
-        n_in_r = pages.count()
+        n_in_r = lw.rows(pages)
         redirects = (
             with_meta_refresh(pages.select("url", "html"))
             .where(F.col("refresh_abs").isNotNull())
@@ -268,7 +268,7 @@ def run_kg_pipeline(
         )
         lw.record(
             "pages_redirect_gate", input_rows=n_in_r,
-            output_rows=pages.count(),
+            output_rows=lw.rows(pages),
             wall_ms=int((time.monotonic() - tr) * 1000),
         )
 
@@ -285,7 +285,7 @@ def run_kg_pipeline(
             )
 
             tm = time.monotonic()
-            n_in_m = pages.count()
+            n_in_m = lw.rows(pages)
             mc = main_content(pages.select("url", "html")).select(
                 "url",
                 F.col("main_text").alias("text"),
@@ -320,7 +320,7 @@ def run_kg_pipeline(
         )
 
         tq = time.monotonic()
-        n_in_q = pages.count()
+        n_in_q = lw.rows(pages)
         passing = quality_filter(txt, id_col="url", text_col="text").select(
             F.col("id").alias("url")
         )
@@ -344,7 +344,7 @@ def run_kg_pipeline(
         )
         lw.record(
             "pages_quality_gate", input_rows=n_in_q,
-            output_rows=pages.count(),
+            output_rows=lw.rows(pages),
             wall_ms=int((time.monotonic() - tq) * 1000),
         )
 
@@ -354,7 +354,7 @@ def run_kg_pipeline(
         )
 
         td = time.monotonic()
-        n_in_d = pages.count()
+        n_in_d = lw.rows(pages)
         # only judge pages still alive after the earlier gates
         live_txt = txt.join(pages.select("url"), "url", "left_semi")
         clean = (
@@ -373,7 +373,7 @@ def run_kg_pipeline(
         )
         lw.record(
             "pages_decontam_gate", input_rows=n_in_d,
-            output_rows=pages.count(),
+            output_rows=lw.rows(pages),
             wall_ms=int((time.monotonic() - td) * 1000),
         )
 
@@ -386,7 +386,7 @@ def run_kg_pipeline(
         )
 
         tc = time.monotonic()
-        n_in_c = pages.count()
+        n_in_c = lw.rows(pages)
         doms = canonicalize_urls(pages.select("url")).select(
             "url", "registered_domain"
         )
@@ -407,7 +407,7 @@ def run_kg_pipeline(
         )
         lw.record(
             "pages_domain_cap", input_rows=n_in_c,
-            output_rows=pages.count(),
+            output_rows=lw.rows(pages),
             wall_ms=int((time.monotonic() - tc) * 1000),
         )
 
@@ -434,7 +434,7 @@ def run_kg_pipeline(
             )
             lw.record(
                 "sequence_packing",
-                input_rows=out_extra["corpus"].count(),
+                input_rows=lw.rows(out_extra["corpus"]),
                 output_rows=out_extra["sequences"]
                 .select("seq_id").distinct().count(),
                 wall_ms=int((time.monotonic() - tp) * 1000),
@@ -505,7 +505,7 @@ def run_kg_pipeline(
             pages.select("url"), "url", "left_anti"
         )
         cand = lw.checkpoint_stage("frontier_candidates", cand)
-        n_cand = cand.count()
+        n_cand = lw.rows(cand)
         allowed = cand
         if robots is not None:
             tg = time.monotonic()
@@ -520,7 +520,7 @@ def run_kg_pipeline(
             )
             lw.record(
                 "frontier_robots_gate", input_rows=n_cand,
-                output_rows=allowed.count(),
+                output_rows=lw.rows(allowed),
                 wall_ms=int((time.monotonic() - tg) * 1000),
             )
         sched = schedule_frontier(
@@ -546,7 +546,7 @@ def run_kg_pipeline(
         )
         lw.record(
             "frontier_scheduling", input_rows=n_cand,
-            output_rows=out_extra["frontier"].count(),
+            output_rows=lw.rows(out_extra["frontier"]),
             wall_ms=int((time.monotonic() - tf) * 1000),
         )
 
@@ -565,7 +565,7 @@ def run_kg_pipeline(
         )
 
         ts = time.monotonic()
-        n_in_s = segs.count()
+        n_in_s = lw.rows(segs)
         dup = duplicated_line_hashes(
             segs, "url", "text", min_docs=segment_dedup
         )
@@ -580,7 +580,7 @@ def run_kg_pipeline(
         )
         lw.record(
             "segments_boiler_gate", input_rows=n_in_s,
-            output_rows=segs.count(),
+            output_rows=lw.rows(segs),
             wall_ms=int((time.monotonic() - ts) * 1000),
         )
 
@@ -616,8 +616,8 @@ def run_kg_pipeline(
         ej = lw.checkpoint_stage("edges_jsonld", jsonld_triples(pages))
         out_extra["edges_jsonld"] = ej
         lw.record(
-            "jsonld_extraction", input_rows=pages.count(),
-            output_rows=ej.count(),
+            "jsonld_extraction", input_rows=lw.rows(pages),
+            output_rows=lw.rows(ej),
             wall_ms=int((time.monotonic() - ts) * 1000),
         )
 
@@ -632,8 +632,8 @@ def run_kg_pipeline(
         et = lw.checkpoint_stage("edges_tables", table_triples(pages))
         out_extra["edges_tables"] = et
         lw.record(
-            "table_extraction", input_rows=pages.count(),
-            output_rows=et.count(),
+            "table_extraction", input_rows=lw.rows(pages),
+            output_rows=lw.rows(et),
             wall_ms=int((time.monotonic() - ts) * 1000),
         )
 
@@ -648,11 +648,11 @@ def run_kg_pipeline(
         )
 
         ts = time.monotonic()
-        n_in_f = edges.count()
+        n_in_f = lw.rows(edges)
         fused = lw.checkpoint_stage("edges_fused", _fuse_edges(edges))
         out_extra["edges_fused"] = fused
         lw.record(
-            "edges_fusion", input_rows=n_in_f, output_rows=fused.count(),
+            "edges_fusion", input_rows=n_in_f, output_rows=lw.rows(fused),
             wall_ms=int((time.monotonic() - ts) * 1000),
         )
 
@@ -672,8 +672,8 @@ def run_kg_pipeline(
         nt = lw.checkpoint_stage("edges_ntriples", to_ntriples(nt_src))
         out_extra["edges_ntriples"] = nt
         lw.record(
-            "ntriples_export", input_rows=nt_src.count(),
-            output_rows=nt.count(),
+            "ntriples_export", input_rows=lw.rows(nt_src),
+            output_rows=lw.rows(nt),
             wall_ms=int((time.monotonic() - ts) * 1000),
         )
 
@@ -692,7 +692,7 @@ def run_kg_pipeline(
     )
     nodes = lw.checkpoint_stage("nodes", nodes)
 
-    lw.record("pipeline_total", input_rows=-1, output_rows=edges.count(),
+    lw.record("pipeline_total", input_rows=-1, output_rows=lw.rows(edges),
               wall_ms=int((time.monotonic() - t0) * 1000))
     return {"segments": segs, "linked": linked, "edges": edges,
             "edges_dedup": edges_dedup, "nodes": nodes, **out_extra}

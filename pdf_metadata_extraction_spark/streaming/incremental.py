@@ -240,13 +240,44 @@ def compact_registers(
     fs, jroot = ckpt.fs_for(spark, reg_dir)
     if not fs.exists(jroot):
         return
-    olds = [
-        s.getPath()
-        for s in fs.listStatus(jroot)
-        if s.getPath().getName().startswith("batch_id=")
-        and int(s.getPath().getName().split("=", 1)[1]) < upto_batch
-    ]
-    if len(olds) <= 1:
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    tmp = Path(f"{reg_dir}/_compact_tmp_{upto_batch}")
+    target = Path(f"{reg_dir}/batch_id={upto_batch - 1}")
+
+    def olds():
+        return [
+            s.getPath()
+            for s in fs.listStatus(jroot)
+            if s.getPath().getName().startswith("batch_id=")
+            and int(s.getPath().getName().split("=", 1)[1]) < upto_batch
+        ]
+
+    def finish() -> None:
+        # tmp holds the merged state of EVERY batch_id < upto_batch:
+        # move it into the (already deleted) target, then drop the
+        # originals it subsumes
+        if not fs.rename(tmp, target):
+            raise IOError(
+                f"compact_registers: rename {tmp} -> {target} failed; "
+                f"{target} is already deleted and its registers live only "
+                f"in {tmp}: re-run compact_registers to finish"
+            )
+        for p in olds():
+            if p.getName() != target.getName():
+                fs.delete(p, True)
+
+    # crash resume: a run that died between deleting the target and the
+    # rename left a committed tmp and no target — the sink undercounts
+    # until the rename is finished, so finish it before anything else
+    # (a tmp without _SUCCESS died mid-write; the target still exists
+    # then, or never did, and the compaction below redoes it)
+    if (
+        fs.exists(tmp)
+        and not fs.exists(target)
+        and fs.exists(Path(tmp, "_SUCCESS"))
+    ):
+        finish()
+    if len(olds()) <= 1:
         return
     merged = (
         spark.read.parquet(reg_dir)
@@ -257,26 +288,13 @@ def compact_registers(
     compacted = merged.groupBy(*keys).agg(
         F.max("register").alias("register")
     )
-    tmp = f"{reg_dir}/_compact_tmp_{upto_batch}"
-    compacted.write.mode("overwrite").parquet(tmp)
+    compacted.write.mode("overwrite").parquet(tmp.toString())
     # crash-safety (round-7 ADVICE): shrink the unsafe window to the
     # single colliding partition. Delete ONLY batch_id=upto_batch-1
     # (the rename target), rename tmp into place and REFUSE silently-
     # failed renames, and only then drop the other old partitions —
     # the merged estimate equals the originals at every intermediate
-    # state except between target-delete and rename, versus the old
-    # delete-everything-then-rename ordering (and an ignored rename
-    # result) which could silently undercount every later merge.
-    jvm = spark._jvm
-    target = jvm.org.apache.hadoop.fs.Path(
-        f"{reg_dir}/batch_id={upto_batch - 1}"
-    )
+    # state except between target-delete and rename, and a crash in
+    # that window is finished by the resume step above on the next call.
     fs.delete(target, True)
-    if not fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), target):
-        raise IOError(
-            f"compact_registers: rename {tmp} -> {target} failed; "
-            f"sink left uncompacted (originals intact)"
-        )
-    for p in olds:
-        if p.getName() != f"batch_id={upto_batch - 1}":
-            fs.delete(p, True)
+    finish()

@@ -444,3 +444,59 @@ def test_streaming_sketch_compaction_preserves_state(spark, tmp_path):
     )
     assert merged.subtract(expect).count() == 0
     assert expect.subtract(merged).count() == 0
+
+
+def test_compact_registers_resumes_after_crash_before_rename(spark, tmp_path):
+    """A compaction killed between deleting batch_id=N-1 and renaming
+    its tmp into place leaves the sink undercounting; the next
+    compact_registers call finishes the rename first, so the merged
+    estimate equals the uncompacted sink's."""
+    import os
+    import shutil
+
+    from pdf_metadata_extraction_spark.operators.sketch import (
+        hll_estimate,
+        merge_registers,
+    )
+    from pdf_metadata_extraction_spark.streaming.incremental import (
+        compact_registers,
+        run_distinct_sketch,
+    )
+
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    schema = T.StructType(
+        [T.StructField("host", T.StringType()),
+         T.StructField("url", T.StringType())]
+    )
+    for b in range(3):
+        (feed / f"b{b}.jsonl").write_text("\n".join(
+            json.dumps({"host": "h", "url": f"u{b}-{i}"}) for i in range(50)
+        ))
+    work = str(tmp_path / "sk")
+    reg_dir = f"{work}/registers"
+    stream = spark.readStream.schema(schema).option(
+        "maxFilesPerTrigger", 1
+    ).json(str(feed))
+    run_distinct_sketch(stream, work, ["host"], "url", p=5)\
+        .awaitTermination(180)
+
+    def merged_est():
+        regs = spark.read.parquet(reg_dir).drop("batch_id")
+        return hll_estimate(merge_registers(regs), ["host"], p=5).collect()[0]["est"]
+
+    clean = merged_est()
+    # the on-disk state of the crash: committed tmp, target deleted
+    (
+        spark.read.parquet(reg_dir).where("batch_id < 2").drop("batch_id")
+        .groupBy("host", "bucket").agg(F.max("register").alias("register"))
+        .write.parquet(f"{reg_dir}/_compact_tmp_2")
+    )
+    shutil.rmtree(f"{reg_dir}/batch_id=1")
+    assert merged_est() != clean  # the window this test closes
+
+    compact_registers(spark, work, upto_batch=2)
+    assert sorted(
+        d for d in os.listdir(reg_dir) if not d.startswith(".")
+    ) == ["batch_id=1", "batch_id=2"]  # tmp renamed, batch 0 dropped
+    assert merged_est() == clean
