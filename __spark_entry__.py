@@ -199,7 +199,7 @@ def entry(spark: SparkSession) -> DataFrame:
     import pandas as pd
 
     from pdf_metadata_extraction_spark.operators.linking import link_options
-    from pdf_metadata_extraction_spark.operators.triples import triples_to_edges
+    from pdf_metadata_extraction_spark.operators.triples import edges_from_linked
     from pdf_metadata_extraction_spark.plans.pipeline import segments_from_pages
 
     docs = _t(spark, "/root/testdata/sf0.001", "documents")
@@ -227,18 +227,7 @@ def entry(spark: SparkSession) -> DataFrame:
         "extraction_name string, option_id string, label string, multi_value boolean",
     )
     linked = link_options(segs, options).where(F.size("values") > 0)
-    triples = linked.select(
-        F.lit("flagship").alias("run_name"),
-        "extraction_name",
-        "url",
-        F.col("url").alias("entity_name"),
-        F.lit(None).cast("string").alias("text"),
-        "values",
-        F.col("text").alias("segment_text"),
-        F.col("page").alias("page_number"),
-        F.col("boxes").alias("segments_boxes"),
-    )
-    return triples_to_edges(triples)
+    return edges_from_linked(linked)
 
 
 # ================================================================ queries

@@ -30,7 +30,7 @@ def main() -> None:
         lsh_candidate_pairs, minhash_signature, shingles,
     )
     from pdf_metadata_extraction_spark.operators.linking import link_options
-    from pdf_metadata_extraction_spark.operators.triples import triples_to_edges
+    from pdf_metadata_extraction_spark.operators.triples import edges_from_linked
     from pdf_metadata_extraction_spark.session import get_spark
     from pdf_metadata_extraction_spark.sources.pages_synth import generate_pages
 
@@ -103,16 +103,7 @@ def main() -> None:
             "extraction_name string, option_id string, label string, multi_value boolean",
         )
         linked = link_options(segs, options).where(F.size("values") > 0)
-        n = triples_to_edges(
-            linked.select(
-                F.lit("bench").alias("run_name"), "extraction_name", "url",
-                F.col("url").alias("entity_name"),
-                F.lit(None).cast("string").alias("text"), "values",
-                F.col("text").alias("segment_text"),
-                F.col("page").alias("page_number"),
-                F.col("boxes").alias("segments_boxes"),
-            )
-        ).count()
+        n = edges_from_linked(linked).count()
         extras["kg_edges"] = n
 
     timed("kg_pipeline", kg_pipeline)

@@ -7,10 +7,10 @@ local box). Importing them ONCE in the daemon parent lets every fork
 inherit the loaded modules copy-on-write instead.
 
 Opt in with ``spark.python.daemon.module =
-pdf_metadata_extraction_spark.daemon_preload`` (set by
-``session.get_spark``; env-overridable). The module must be
-importable on every worker host — true for local mode and for any
-cluster that ships the package."""
+pdf_metadata_extraction_spark.daemon_preload``; ``session.get_spark``
+sets it under a local master only (``extra_conf`` can set it for any
+master). The module must be importable on every worker host — true
+for local mode and for any cluster that ships the package."""
 
 # EVERY preload import is individually guarded: a missing/broken
 # library must degrade to the stock lazy-import behavior, never take

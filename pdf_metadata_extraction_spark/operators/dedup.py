@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pdf_metadata_extraction_spark.operators.words import word_array
+
 SIMHASH_BITS = 64
 SIMHASH_BANDS = 4  # 4 × 16-bit bands (MinHash-LSH-style banded layout)
 _BAND_BITS = SIMHASH_BITS // SIMHASH_BANDS
@@ -137,12 +139,6 @@ def incremental_exact(
     return classified, updated
 
 
-def _token_words(text_col: str):
-    return F.filter(
-        F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), lambda w: w != ""
-    )
-
-
 def simhash(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
     """64-bit bit-majority simhash over distinct token hashes, banded.
 
@@ -162,7 +158,7 @@ def simhash(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
     """
     words = df.select(
         F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(_token_words(text_col))).alias("w"),
+        F.explode(F.array_distinct(word_array(text_col))).alias("w"),
     ).withColumn("h", F.md5("w"))
     aggs = []
     for b in range(SIMHASH_BANDS):

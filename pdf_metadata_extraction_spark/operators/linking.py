@@ -50,11 +50,6 @@ def highlight(text: str, start: int, end: int) -> str:
     )
 
 
-def _word_pattern(label: str) -> re.Pattern:
-    # whole-word, case-sensitive first; the boundary is "not aliphanumeric"
-    return re.compile(rf"(?<!\w){re.escape(label)}(?!\w)")
-
-
 @_lru_cache_small
 def _ids_by_label(options: tuple[tuple[str, str], ...]) -> dict[str, str]:
     """Label → option id in the canonical resolution order (option_id

@@ -63,6 +63,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pdf_metadata_extraction_spark.operators.urlnorm import URL_RE
+from pdf_metadata_extraction_spark.operators.words import word_array
 
 # anchored to <a elements (round-3 ADVICE: a bare href=" matched
 # <link>, <base>, <area> and commented-out markup, inflating link mass
@@ -341,18 +342,13 @@ def anchor_term_profile(
     the anchor texts of resolved in-links, aggregated per target host
     (the classic anchor-text-describes-the-target signal search
     engines and web KGs both exploit; feeds entity naming and alias
-    discovery). Tokenization matches textstats (lower, non-alnum
-    split). Map-only until one (dst_host, term) aggregation."""
+    discovery). Terms are ``words.word_array`` words. Map-only until
+    one (dst_host, term) aggregation."""
     anchors = extract_anchor_texts(df, url_col, html_col)
     resolved = resolve_hrefs(anchors).where(F.col("abs_url").isNotNull())
     terms = resolved.select(
         _host_of(F.col("abs_url")).alias("dst_host"),
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col("anchor_text")), "[^a-z0-9]+"),
-                lambda w: w != "",
-            )
-        ).alias("term"),
+        F.explode(word_array("anchor_text")).alias("term"),
     ).where(F.col("dst_host") != "")
     out = terms.groupBy("dst_host", "term").agg(
         F.count("*").cast("long").alias("n")

@@ -49,7 +49,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-_TOKENS = "filter(split(lower({t}), '[^a-z0-9]+'), x -> x != '')"
+from pdf_metadata_extraction_spark.operators.words import word_array
 
 
 def doc_token_counts(
@@ -58,9 +58,7 @@ def doc_token_counts(
     """(id, n_tokens) with the repo-wide word tokenisation."""
     return df.select(
         F.col(id_col).alias("id"),
-        F.size(F.expr(_TOKENS.format(t=text_col))).cast("long").alias(
-            "n_tokens"
-        ),
+        F.size(word_array(text_col)).cast("long").alias("n_tokens"),
     )
 
 

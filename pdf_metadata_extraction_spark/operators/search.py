@@ -30,14 +30,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pdf_metadata_extraction_spark.operators.words import word_array
+
 BM25_K1 = 1.2
 BM25_B = 0.75
-
-
-def _words(text_col: str):
-    return F.filter(
-        F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), lambda w: w != ""
-    )
 
 
 def _eq(term: str):
@@ -122,7 +118,7 @@ def bm25_rank(
     """
     terms = list(query_terms)
     base = docs.select(
-        F.col(id_col).alias("id"), _words(text_col).alias("_w")
+        F.col(id_col).alias("id"), word_array(text_col).alias("_w")
     ).select(
         "id",
         F.size("_w").alias("dl"),
@@ -149,7 +145,7 @@ def build_postings(
     term-partition-prunable.
     """
     words = docs.select(
-        F.col(id_col).alias("id"), _words(text_col).alias("_w")
+        F.col(id_col).alias("id"), word_array(text_col).alias("_w")
     )
     doc_lens = words.select("id", F.size("_w").cast("long").alias("dl"))
     postings = (

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pdf_metadata_extraction_spark.operators.words import word_array
+
 # per-language stopword marker sets (n-gram heuristic; deterministic).
 # ASCII-only so lowercasing/replace semantics are identical across
 # engines; __spark_entry__ derives its DuckDB oracle from THIS dict, so
@@ -327,7 +329,7 @@ def quality_score(df: DataFrame, id_col: str, text_col: str = "text") -> DataFra
     punct = F.length(F.regexp_replace(t, r"[A-Za-z0-9\s]", "")) / n
     spaces = F.length(t) - F.length(F.replace(t, F.lit(" "), F.lit("")))
     n_words = (spaces + 1).cast("double")
-    words = F.filter(F.split(F.lower(t), r"[^a-z0-9]+"), lambda w: w != "")
+    words = word_array(text_col)
     stop_hits = F.size(
         F.filter(words, lambda w: w.isin(list(_QUALITY_STOPWORDS)))
     )
@@ -491,9 +493,7 @@ def repetition_signals(
     """
     d = df.select(
         F.col(id_col).alias("id"),
-        F.expr(
-            f"filter(split(lower({text_col}), '[^a-z0-9]+'), x -> x != '')"
-        ).alias("_w"),
+        word_array(text_col).alias("_w"),
     ).withColumn(
         "_g2",
         F.when(
@@ -569,7 +569,7 @@ def quality_filter(
         + F.when(digits <= 0.2, 0.1).otherwise(0.0),
         6,
     )
-    words = F.filter(F.split(F.lower(t), r"[^a-z0-9]+"), lambda w: w != "")
+    words = word_array(text_col)
     total = F.size(words)
     dup = F.when(
         total > 0,

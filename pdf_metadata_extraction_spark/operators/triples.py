@@ -80,3 +80,17 @@ def triples_to_edges(triples: DataFrame) -> DataFrame:
         "provenance_url",
         F.col("o.segment_text").alias("segment_text"),
     )
+
+
+def edges_from_linked(linked: DataFrame) -> DataFrame:
+    """Edges of ``link_options`` output: subj = the segment's page url,
+    one edge per linked option id. Only the columns ``triples_to_edges``
+    reads are projected (run name, page and boxes never reach an edge)."""
+    return triples_to_edges(
+        linked.select(
+            "extraction_name", "url", "values",
+            F.col("url").alias("entity_name"),
+            F.lit(None).cast("string").alias("text"),
+            F.col("text").alias("segment_text"),
+        )
+    )

@@ -24,9 +24,14 @@ from pyspark.sql import functions as F
 from pdf_metadata_extraction_spark.operators.canonicalize import canonicalize
 from pdf_metadata_extraction_spark.operators.linking import link_options
 from pdf_metadata_extraction_spark.operators.skew import DEFAULT_SALT, with_salt
-from pdf_metadata_extraction_spark.operators.triples import triples_to_edges
+from pdf_metadata_extraction_spark.operators.triples import edges_from_linked
 from pdf_metadata_extraction_spark.plans.lineage import LineageWriter
 from pdf_metadata_extraction_spark.plans.pipeline import segments_from_pages
+
+
+def _url_buckets(pages: DataFrame) -> list[str] | None:
+    """Page stages keep the input's url_bucket layout when it has one."""
+    return ["url_bucket"] if "url_bucket" in pages.columns else None
 
 
 def run_kg_pipeline(
@@ -207,6 +212,21 @@ def run_kg_pipeline(
     lw = LineageWriter(spark, work_dir, run_id)
     t0 = time.monotonic()
 
+    def step(stage, df, row, input_rows, partition_by=None):
+        """Checkpoint ``df`` as ``stage`` and record the summary lineage
+        row ``row`` (input_rows, rows written, wall time of the write)."""
+        ts = time.monotonic()
+        out = lw.checkpoint_stage(stage, df, partition_by, input_rows)
+        lw.record(
+            row, input_rows=input_rows, output_rows=lw.rows(out),
+            wall_ms=int((time.monotonic() - ts) * 1000),
+        )
+        return out
+
+    def page_gate(stage, row, pages_in, kept):
+        """A gate that drops pages: ``kept`` is a subset of ``pages_in``."""
+        return step(stage, kept, row, lw.rows(pages_in), _url_buckets(kept))
+
     if normalize_urls:
         from pdf_metadata_extraction_spark.operators.urlnorm import (
             canonicalize_urls,
@@ -227,10 +247,8 @@ def run_kg_pipeline(
         )
         cleaned = dedup_pages_by_canonical_url(pages)
         pages = lw.checkpoint_stage(
-            "pages_clean", cleaned, input_rows=n_in,
-            partition_by=(
-                ["url_bucket"] if "url_bucket" in cleaned.columns else None
-            ),
+            "pages_clean", cleaned, partition_by=_url_buckets(cleaned),
+            input_rows=n_in,
         )
 
     if follow_redirects:
@@ -239,8 +257,6 @@ def run_kg_pipeline(
             with_meta_refresh,
         )
 
-        tr = time.monotonic()
-        n_in_r = lw.rows(pages)
         redirects = (
             with_meta_refresh(pages.select("url", "html"))
             .where(F.col("refresh_abs").isNotNull())
@@ -252,7 +268,6 @@ def run_kg_pipeline(
         chains = lw.checkpoint_stage(
             "url_redirects", resolve_redirect_chains(redirects, max_hops=3)
         )
-        out_redirects = chains
         # a refresh page is an alias shell, not content: drop it from
         # the corpus; the url_redirects stage keeps (src, final_url,
         # n_hops, status) so canonicalization can alias resolved
@@ -260,16 +275,8 @@ def run_kg_pipeline(
         kept_r = pages.join(
             chains.select(F.col("src").alias("url")), "url", "left_anti"
         )
-        pages = lw.checkpoint_stage(
-            "pages_noredirect", kept_r, input_rows=n_in_r,
-            partition_by=(
-                ["url_bucket"] if "url_bucket" in kept_r.columns else None
-            ),
-        )
-        lw.record(
-            "pages_redirect_gate", input_rows=n_in_r,
-            output_rows=lw.rows(pages),
-            wall_ms=int((time.monotonic() - tr) * 1000),
+        pages = page_gate(
+            "pages_noredirect", "pages_redirect_gate", pages, kept_r
         )
 
     txt = None
@@ -319,8 +326,6 @@ def run_kg_pipeline(
             quality_filter,
         )
 
-        tq = time.monotonic()
-        n_in_q = lw.rows(pages)
         passing = quality_filter(txt, id_col="url", text_col="text").select(
             F.col("id").alias("url")
         )
@@ -336,25 +341,13 @@ def run_kg_pipeline(
             .select("url")
         )
         gated = pages.join(survivors, "url", "left_semi")
-        pages = lw.checkpoint_stage(
-            "pages_quality", gated, input_rows=n_in_q,
-            partition_by=(
-                ["url_bucket"] if "url_bucket" in gated.columns else None
-            ),
-        )
-        lw.record(
-            "pages_quality_gate", input_rows=n_in_q,
-            output_rows=lw.rows(pages),
-            wall_ms=int((time.monotonic() - tq) * 1000),
-        )
+        pages = page_gate("pages_quality", "pages_quality_gate", pages, gated)
 
     if decontam_eval is not None:
         from pdf_metadata_extraction_spark.operators.decontam import (
             contamination,
         )
 
-        td = time.monotonic()
-        n_in_d = lw.rows(pages)
         # only judge pages still alive after the earlier gates
         live_txt = txt.join(pages.select("url"), "url", "left_semi")
         clean = (
@@ -365,16 +358,8 @@ def run_kg_pipeline(
             .select("url")
         )
         decon = pages.join(clean, "url", "left_semi")
-        pages = lw.checkpoint_stage(
-            "pages_decontam", decon, input_rows=n_in_d,
-            partition_by=(
-                ["url_bucket"] if "url_bucket" in decon.columns else None
-            ),
-        )
-        lw.record(
-            "pages_decontam_gate", input_rows=n_in_d,
-            output_rows=lw.rows(pages),
-            wall_ms=int((time.monotonic() - td) * 1000),
+        pages = page_gate(
+            "pages_decontam", "pages_decontam_gate", pages, decon
         )
 
     if domain_cap is not None:
@@ -385,8 +370,6 @@ def run_kg_pipeline(
             canonicalize_urls,
         )
 
-        tc = time.monotonic()
-        n_in_c = lw.rows(pages)
         doms = canonicalize_urls(pages.select("url")).select(
             "url", "registered_domain"
         )
@@ -399,21 +382,13 @@ def run_kg_pipeline(
             doms.where(F.col("registered_domain").isNull()).select("url")
         )
         capped = pages.join(keep, "url", "left_semi")
-        pages = lw.checkpoint_stage(
-            "pages_domain_capped", capped, input_rows=n_in_c,
-            partition_by=(
-                ["url_bucket"] if "url_bucket" in capped.columns else None
-            ),
-        )
-        lw.record(
-            "pages_domain_cap", input_rows=n_in_c,
-            output_rows=lw.rows(pages),
-            wall_ms=int((time.monotonic() - tc) * 1000),
+        pages = page_gate(
+            "pages_domain_capped", "pages_domain_cap", pages, capped
         )
 
     out_extra: dict[str, DataFrame] = {}
     if follow_redirects:
-        out_extra["url_redirects"] = out_redirects
+        out_extra["url_redirects"] = chains
     if export_corpus:
         # the (url, text) table a tokenizer/packing job consumes —
         # texts of pages every enabled gate kept
@@ -482,7 +457,6 @@ def run_kg_pipeline(
             schedule_frontier,
         )
 
-        tf = time.monotonic()
         pages_txt = pages.select(
             "url", F.col("html").cast("string").alias("html_text")
         )
@@ -508,20 +482,13 @@ def run_kg_pipeline(
         n_cand = lw.rows(cand)
         allowed = cand
         if robots is not None:
-            tg = time.monotonic()
             rules = parse_robots(robots)
-            allowed = (
+            allowed = step(
+                "frontier_allowed",
                 robots_allowed(cand, rules, agent=frontier_agent)
                 .where(F.col("robots_allowed"))
-                .select("url")
-            )
-            allowed = lw.checkpoint_stage(
-                "frontier_allowed", allowed, input_rows=n_cand
-            )
-            lw.record(
-                "frontier_robots_gate", input_rows=n_cand,
-                output_rows=lw.rows(allowed),
-                wall_ms=int((time.monotonic() - tg) * 1000),
+                .select("url"),
+                "frontier_robots_gate", n_cand,
             )
         sched = schedule_frontier(
             allowed,
@@ -541,13 +508,8 @@ def run_kg_pipeline(
             sched = sched.withColumn(
                 "delay_s", F.lit(None).cast("long")
             )
-        out_extra["frontier"] = lw.checkpoint_stage(
-            "frontier_schedule", sched, input_rows=n_cand
-        )
-        lw.record(
-            "frontier_scheduling", input_rows=n_cand,
-            output_rows=lw.rows(out_extra["frontier"]),
-            wall_ms=int((time.monotonic() - tf) * 1000),
+        out_extra["frontier"] = step(
+            "frontier_schedule", sched, "frontier_scheduling", n_cand
         )
 
     segs = segments_from_pages(pages).withColumn(
@@ -564,8 +526,6 @@ def run_kg_pipeline(
             line_hash_col,
         )
 
-        ts = time.monotonic()
-        n_in_s = lw.rows(segs)
         dup = duplicated_line_hashes(
             segs, "url", "text", min_docs=segment_dedup
         )
@@ -574,30 +534,15 @@ def run_kg_pipeline(
             .join(dup, "lh", "left_anti")
             .drop("lh")
         )
-        segs = lw.checkpoint_stage(
-            "segments_kept", kept, input_rows=n_in_s,
-            partition_by=["salt"],
-        )
-        lw.record(
-            "segments_boiler_gate", input_rows=n_in_s,
-            output_rows=lw.rows(segs),
-            wall_ms=int((time.monotonic() - ts) * 1000),
+        segs = step(
+            "segments_kept", kept, "segments_boiler_gate", lw.rows(segs),
+            ["salt"],
         )
 
     linked = link_options(segs, options).where(F.size("values") > 0)
     linked = lw.checkpoint_stage("linked", linked, partition_by=["salt"])
 
-    edges = triples_to_edges(
-        linked.select(
-            F.lit(run_id).alias("run_name"), "extraction_name", "url",
-            F.col("url").alias("entity_name"),
-            F.lit(None).cast("string").alias("text"), "values",
-            F.col("text").alias("segment_text"),
-            F.col("page").alias("page_number"),
-            F.col("boxes").alias("segments_boxes"),
-        )
-    )
-    edges = lw.checkpoint_stage("edges", edges)
+    edges = lw.checkpoint_stage("edges", edges_from_linked(linked))
 
     # canonical edge set: distinct (subj, pred, obj) — provenance rows stay
     # in the `edges` stage; this is the graph-facing table (SURVEY §2.6)
@@ -612,13 +557,9 @@ def run_kg_pipeline(
             jsonld_triples,
         )
 
-        ts = time.monotonic()
-        ej = lw.checkpoint_stage("edges_jsonld", jsonld_triples(pages))
-        out_extra["edges_jsonld"] = ej
-        lw.record(
-            "jsonld_extraction", input_rows=lw.rows(pages),
-            output_rows=lw.rows(ej),
-            wall_ms=int((time.monotonic() - ts) * 1000),
+        out_extra["edges_jsonld"] = step(
+            "edges_jsonld", jsonld_triples(pages), "jsonld_extraction",
+            lw.rows(pages),
         )
 
     if tables:
@@ -628,13 +569,9 @@ def run_kg_pipeline(
             table_triples,
         )
 
-        ts = time.monotonic()
-        et = lw.checkpoint_stage("edges_tables", table_triples(pages))
-        out_extra["edges_tables"] = et
-        lw.record(
-            "table_extraction", input_rows=lw.rows(pages),
-            output_rows=lw.rows(et),
-            wall_ms=int((time.monotonic() - ts) * 1000),
+        out_extra["edges_tables"] = step(
+            "edges_tables", table_triples(pages), "table_extraction",
+            lw.rows(pages),
         )
 
     if fuse:
@@ -647,13 +584,8 @@ def run_kg_pipeline(
             fuse_edges as _fuse_edges,
         )
 
-        ts = time.monotonic()
-        n_in_f = lw.rows(edges)
-        fused = lw.checkpoint_stage("edges_fused", _fuse_edges(edges))
-        out_extra["edges_fused"] = fused
-        lw.record(
-            "edges_fusion", input_rows=n_in_f, output_rows=lw.rows(fused),
-            wall_ms=int((time.monotonic() - ts) * 1000),
+        out_extra["edges_fused"] = step(
+            "edges_fused", _fuse_edges(edges), "edges_fusion", lw.rows(edges)
         )
 
     if export_ntriples:
@@ -667,14 +599,10 @@ def run_kg_pipeline(
             to_ntriples,
         )
 
-        ts = time.monotonic()
         nt_src = out_extra.get("edges_fused", edges_dedup)
-        nt = lw.checkpoint_stage("edges_ntriples", to_ntriples(nt_src))
-        out_extra["edges_ntriples"] = nt
-        lw.record(
-            "ntriples_export", input_rows=lw.rows(nt_src),
-            output_rows=lw.rows(nt),
-            wall_ms=int((time.monotonic() - ts) * 1000),
+        out_extra["edges_ntriples"] = step(
+            "edges_ntriples", to_ntriples(nt_src), "ntriples_export",
+            lw.rows(nt_src),
         )
 
     # canonicalize object surface forms (obj strings) → nodes table

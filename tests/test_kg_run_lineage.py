@@ -809,10 +809,8 @@ def test_kg_run_every_stage_at_once(spark, tmp_path):
         "edges_ntriples",
     ):
         assert key in out, f"missing stage output {key}"
-    stages = {
-        r["stage"]
-        for r in spark.read.parquet(f"{work}/lineage").collect()
-    }
+    lineage = spark.read.parquet(f"{work}/lineage").collect()
+    stages = {r["stage"] for r in lineage}
     for stage in (
         "pages_quality_gate", "pages_content_gate", "pages_decontam_gate",
         "pages_domain_cap",
@@ -821,6 +819,24 @@ def test_kg_run_every_stage_at_once(spark, tmp_path):
         "pipeline_total",
     ):
         assert stage in stages, f"missing lineage row {stage}"
+    # each summary row carries the (input_rows, output_rows) of the
+    # stage it summarizes
+    counts = {
+        r["stage"]: (r["input_rows"], r["output_rows"])
+        for r in lineage if r["partition_range"] == "all"
+    }
+    for summary, stage in (
+        ("pages_redirect_gate", "pages_noredirect"),
+        ("pages_quality_gate", "pages_quality"),
+        ("pages_decontam_gate", "pages_decontam"),
+        ("pages_domain_cap", "pages_domain_capped"),
+        ("segments_boiler_gate", "segments_kept"),
+        ("jsonld_extraction", "edges_jsonld"),
+        ("table_extraction", "edges_tables"),
+        ("edges_fusion", "edges_fused"),
+        ("ntriples_export", "edges_ntriples"),
+    ):
+        assert counts[summary] == counts[stage], (summary, stage)
     # the serializer consumed the FUSED facts (fusion ran)
     assert out["edges_ntriples"].count() == out["edges_fused"].count()
     # the synthetic corpus embeds head tables on ~1/4 of pages; the

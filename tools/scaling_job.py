@@ -27,7 +27,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from pdf_metadata_extraction_spark.operators.linking import link_options
-    from pdf_metadata_extraction_spark.operators.triples import triples_to_edges
+    from pdf_metadata_extraction_spark.operators.triples import edges_from_linked
     from pdf_metadata_extraction_spark.plans.pipeline import segments_from_pages
 
     spark = SparkSession.builder.getOrCreate()
@@ -55,16 +55,7 @@ def main() -> None:
             "extraction_name", F.lit("mentions")
         )
         linked = link_options(segs, options).where(F.size("values") > 0)
-        edges = triples_to_edges(
-            linked.select(
-                F.lit("scaling").alias("run_name"), "extraction_name", "url",
-                F.col("url").alias("entity_name"),
-                F.lit(None).cast("string").alias("text"), "values",
-                F.col("text").alias("segment_text"),
-                F.col("page").alias("page_number"),
-                F.col("boxes").alias("segments_boxes"),
-            )
-        ).count()
+        edges = edges_from_linked(linked).count()
         runs.append(round(time.monotonic() - t0, 3))
 
     print(json.dumps({
